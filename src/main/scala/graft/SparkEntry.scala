@@ -41,8 +41,10 @@ object SparkEntry {
   private val lakeCleanupRegistered =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** One entry per implemented operator from SURVEY.md §2; built once
+    * per JVM.
+    */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q01_pricing_summary" -> (Relational.pricingSummary _),
     "q02_revenue_filter" -> (Relational.revenueFilter _),
     "q03_revenue_by_nation" -> (Relational.revenueByNation _),
@@ -1504,7 +1506,7 @@ object SparkEntry {
         else ""
       s"""WITH raw AS (
            SELECT * FROM read_json(
-             '/root/repo/src/test/resources/jira/raw_issues_TEST.jsonl',
+             ${jiraFixtureSql("raw_issues_TEST.jsonl")},
              format='newline_delimited', columns={
                'key': 'VARCHAR', 'id': 'VARCHAR',
                'fields': 'STRUCT(
@@ -1524,8 +1526,7 @@ object SparkEntry {
                     author STRUCT(displayName VARCHAR, name VARCHAR),
                     created VARCHAR, body VARCHAR)[])
                )'})),
-         ${jiraProbeCte(Seq(
-             "/root/repo/src/test/resources/jira/raw_issues_TEST.jsonl"))},
+         ${jiraProbeCte("raw_issues_TEST.jsonl")},
          f AS (
            SELECT key, id, fields FROM raw
            WHERE $jiraKeepSql),
@@ -1563,10 +1564,20 @@ object SparkEntry {
          FROM c"""
   }
 
-  private def jiraProbeCte(files: Seq[String]): String = {
+  /** SQL string literal naming a file in
+    * [[graft.jira.JiraPipeline.FixtureDir]].
+    */
+  private def jiraFixtureSql(name: String): String =
+    s"'${jira.JiraPipeline.FixtureDir}/$name'"
+
+  /** SQL list literal of files in [[graft.jira.JiraPipeline.FixtureDir]]. */
+  private def jiraFixturesSql(names: String*): String =
+    names.map(jiraFixtureSql).mkString("[", ", ", "]")
+
+  private def jiraProbeCte(fixtures: String*): String = {
     val crash = Seq("status", "priority", "issuetype", "comment",
       "components", "versions", "fixVersions")
-    val fileList = files.map("'" + _ + "'").mkString("[", ", ", "]")
+    val fileList = jiraFixturesSql(fixtures: _*)
     val perField = crash.map { f =>
       s"(COALESCE(list_contains(json_keys(line, '$$.fields'), '$f'), false)" +
         s" AND json_extract(line, '$$.fields.$f') IS NULL)"
@@ -2476,7 +2487,7 @@ object SparkEntry {
   }
 
   /** DuckDB-dialect oracle for each query (same column aliases). */
-  def oracleSql: Map[String, String] = Map(
+  lazy val oracleSql: Map[String, String] = Map(
     "q01_pricing_summary" ->
       """SELECT l_returnflag, l_linestatus,
          round(sum(l_quantity), 2) AS sum_qty,
@@ -3057,7 +3068,7 @@ object SparkEntry {
     "q55_jira_fanout_sql" ->
       ("""WITH raw AS (
            SELECT * FROM read_json(
-             '/root/repo/src/test/resources/jira/raw_issues_TEST.jsonl',
+             """ + jiraFixtureSql("raw_issues_TEST.jsonl") + """,
              format='newline_delimited', columns={
                'key': 'VARCHAR', 'id': 'VARCHAR',
                'fields': 'STRUCT(summary VARCHAR, description VARCHAR,
@@ -3074,8 +3085,7 @@ object SparkEntry {
                   comment STRUCT(comments STRUCT(
                     author STRUCT(displayName VARCHAR, name VARCHAR),
                     created VARCHAR, body VARCHAR)[]))'})),
-         """ + jiraProbeCte(Seq(
-             "/root/repo/src/test/resources/jira/raw_issues_TEST.jsonl")) +
+         """ + jiraProbeCte("raw_issues_TEST.jsonl") +
       """,
          fl AS (
            SELECT
@@ -3653,8 +3663,8 @@ object SparkEntry {
            SELECT *, regexp_extract(filename, 'raw_issues_(\w+)\.jsonl', 1)
              AS project
            FROM read_json(
-             ['/root/repo/src/test/resources/jira/raw_issues_TEST.jsonl',
-              '/root/repo/src/test/resources/jira/raw_issues_TEST2.jsonl'],
+             """ + jiraFixturesSql("raw_issues_TEST.jsonl",
+               "raw_issues_TEST2.jsonl") + """,
              format='newline_delimited', filename=true, columns={
                'key': 'VARCHAR', 'id': 'VARCHAR',
                'fields': 'STRUCT(summary VARCHAR, description VARCHAR,
@@ -3671,9 +3681,8 @@ object SparkEntry {
                   comment STRUCT(comments STRUCT(
                     author STRUCT(displayName VARCHAR, name VARCHAR),
                     created VARCHAR, body VARCHAR)[]))'})),
-         """ + jiraProbeCte(Seq(
-             "/root/repo/src/test/resources/jira/raw_issues_TEST.jsonl",
-             "/root/repo/src/test/resources/jira/raw_issues_TEST2.jsonl")) +
+         """ + jiraProbeCte("raw_issues_TEST.jsonl",
+             "raw_issues_TEST2.jsonl") +
       """,
          fl AS (
            SELECT project,
@@ -3714,8 +3723,8 @@ object SparkEntry {
            SELECT *, regexp_extract(filename, 'raw_issues_(\\w+)\\.jsonl', 1)
              AS project
            FROM read_json(
-             ['/root/repo/src/test/resources/jira/raw_issues_TEST.jsonl',
-              '/root/repo/src/test/resources/jira/raw_issues_TEST2.jsonl'],
+             ${jiraFixturesSql("raw_issues_TEST.jsonl",
+               "raw_issues_TEST2.jsonl")},
              format='newline_delimited', filename=true, columns={
                'key': 'VARCHAR', 'id': 'VARCHAR',
                'fields': 'STRUCT(
@@ -3735,9 +3744,8 @@ object SparkEntry {
                     author STRUCT(displayName VARCHAR, name VARCHAR),
                     created VARCHAR, body VARCHAR)[])
                )'})),
-         ${jiraProbeCte(Seq(
-             "/root/repo/src/test/resources/jira/raw_issues_TEST.jsonl",
-             "/root/repo/src/test/resources/jira/raw_issues_TEST2.jsonl"))},
+         ${jiraProbeCte("raw_issues_TEST.jsonl",
+             "raw_issues_TEST2.jsonl")},
          f AS (
            SELECT * FROM raw
            WHERE $jiraKeepSql),
@@ -3789,7 +3797,7 @@ object SparkEntry {
     // engine corpus to actual reference behavior, not to a SQL
     // re-derivation.
     "qj02_jira_examples" ->
-      """SELECT
+      ("""SELECT
          CAST(CASE WHEN filename LIKE '%TEST2%' THEN 1 ELSE 0 END
            AS INTEGER) AS project_rank,
          metadata.project AS project,
@@ -3797,13 +3805,13 @@ object SparkEntry {
          metadata.created AS created,
          task_type, instruction, "input", "output"
          FROM read_json(
-           ['/root/repo/src/test/resources/jira/golden_examples_TEST.jsonl',
-            '/root/repo/src/test/resources/jira/golden_examples_TEST2.jsonl'],
+           """ + jiraFixturesSql("golden_examples_TEST.jsonl",
+             "golden_examples_TEST2.jsonl") + """,
            format='newline_delimited', filename=true, columns={
              'task_type': 'VARCHAR', 'instruction': 'VARCHAR',
              'input': 'VARCHAR', 'output': 'VARCHAR',
              'metadata': 'STRUCT(issue_key VARCHAR, project VARCHAR,
-               created VARCHAR)'})""",
+               created VARCHAR)'})"""),
     // qj03: per-project stats replay over both projects — q56's
     // fanout CTEs aggregated to the reference's stats record shape
     // (maps/sets as sorted csv scalars).
@@ -3812,8 +3820,8 @@ object SparkEntry {
            SELECT *, regexp_extract(filename, 'raw_issues_(\w+)\.jsonl', 1)
              AS project
            FROM read_json(
-             ['/root/repo/src/test/resources/jira/raw_issues_TEST.jsonl',
-              '/root/repo/src/test/resources/jira/raw_issues_TEST2.jsonl'],
+             """ + jiraFixturesSql("raw_issues_TEST.jsonl",
+               "raw_issues_TEST2.jsonl") + """,
              format='newline_delimited', filename=true, columns={
                'key': 'VARCHAR', 'id': 'VARCHAR',
                'fields': 'STRUCT(summary VARCHAR, description VARCHAR,
@@ -3830,9 +3838,8 @@ object SparkEntry {
                   comment STRUCT(comments STRUCT(
                     author STRUCT(displayName VARCHAR, name VARCHAR),
                     created VARCHAR, body VARCHAR)[]))'})),
-         """ + jiraProbeCte(Seq(
-             "/root/repo/src/test/resources/jira/raw_issues_TEST.jsonl",
-             "/root/repo/src/test/resources/jira/raw_issues_TEST2.jsonl")) +
+         """ + jiraProbeCte("raw_issues_TEST.jsonl",
+             "raw_issues_TEST2.jsonl") +
       """,
          fl AS (
            SELECT project,

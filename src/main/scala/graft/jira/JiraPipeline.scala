@@ -14,7 +14,15 @@ import org.apache.spark.sql.functions._
   */
 object JiraPipeline {
 
-  val FixtureDir = "/root/repo/src/test/resources/jira"
+  /** The checked-in fixture projects, resolved against the working
+    * directory, which is the repository root for sbt, `tools/run.sh`
+    * and the benchmark. Every fixture reader takes the directory from
+    * here: the Spark reads, the DuckDB oracle SQL, `ThroughputBench`
+    * and the specs.
+    */
+  val FixtureDir: String =
+    java.nio.file.Paths.get("src/test/resources/jira").toAbsolutePath
+      .normalize.toString
 
   /** Schema'd parse of the raw issue lines, plus two presence probes
     * read from the raw text ([[JiraFlatten.ProbeFieldsKeys]]/
